@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import rules
+from .warehouse import merge_upsert
 
 
 # Per-session cache of the tiny master frame (r14): createDataFrame of
@@ -121,13 +122,9 @@ def mark_duplicates(df: DataFrame, key: str) -> DataFrame:
 
 def dedup_last_wins(df: DataFrame, key: str, order_col: str) -> DataFrame:
     """D2 (dags/data_cleaning_pipeline.py:54-60, db.py:49-57): collapse to one
-    row per key, LAST occurrence (by ``order_col``) winning."""
-    w = Window.partitionBy(key).orderBy(F.desc(order_col))
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    row per key, LAST occurrence (by ``order_col``) winning — the keyed
+    upsert fold with no target."""
+    return merge_upsert(None, df, [key], order_col)
 
 
 def clean_students(

@@ -13,9 +13,9 @@ the transformation DAG (dags/data_transformation_pipeline.py), Spark-first:
   ``xxhash64(natural key)`` (deterministic, shuffle-free, join-colocatable);
   ``dense=True`` gives contiguous SKs for small-dim parity tests.
 - Upserts: the reference's ``INSERT .. ON CONFLICT DO UPDATE``
-  (db.py:45-65) becomes a key-based merge: in-batch last-write-wins dedup,
-  then target-minus-updates anti-join + union. With Delta available this
-  would be ``MERGE INTO``; the parquet fallback is semantically identical.
+  (db.py:45-65) becomes ``merge_upsert``, the one keyed last-write-wins
+  fold: in-batch last write wins per key and replaces the target's rows
+  for that key, in one union + one key-partitioned window.
 """
 
 from __future__ import annotations
@@ -95,27 +95,28 @@ def merge_upsert(
     keys: list[str],
     order_col: str | None = None,
 ) -> DataFrame:
-    """Keyed upsert semantics of db.py:45-65.
+    """Keyed upsert semantics of db.py:45-65 — the engine's one keyed
+    last-write-wins fold (``cdc.apply_cdc`` and
+    ``cleaning.dedup_last_wins`` are calls to it).
 
     In-batch dedup on the conflict keys (LAST write wins, matching the
-    dict-overwrite at db.py:49-57), then replace matching target rows.
-    NULLs in conflict keys use null-safe equality (``<=>``) — the
-    documented fix for the reference's degenerate NULL-key upsert
-    (SURVEY §7 hard-part 6).
+    dict-overwrite at db.py:49-57: highest ``order_col``, else the last
+    update row in the updates frame's row order), then replace matching
+    target rows. NULLs in conflict keys use null-safe equality (``<=>``)
+    — the documented fix for the reference's degenerate NULL-key upsert
+    (SURVEY §7 hard-part 6). Returns the target's columns, or the
+    updates' columns when there is no target.
+
+    Plan: one union of target and updates, one window partitioned on
+    the key struct — a single exchange, one scan of each input.
     """
-    # MATERIALIZED struct partition key (r14, the bucketed_running_sum
-    # precedent): a struct of the key columns is never NULL at the top
-    # level and struct equality compares NULL fields as equal, so
-    # partitioning on it groups rows exactly like the <=> conjunction
-    # (the documented NULL-key upsert fix). The row-order path is
-    # unaffected: monotonically_increasing_id is projected below the
-    # single window exchange, so each row's id (and therefore the
-    # per-key winner among update rows) is fixed before any
-    # partitioning decision; unioning the target in only shifts every
-    # update partition's id by a constant, preserving relative order.
+    # A struct of the key columns is never NULL at the top level and
+    # struct equality compares NULL fields as equal, so partitioning on
+    # it groups rows exactly like the <=> conjunction.
     kc = "_mu_k"
     cc = "_mu_c"  # 1 = update row, 0 = target row
-    reserved = {kc, cc, "__rn", "__hc"}
+    oc = "_mu_o"  # row-order rank when order_col is None
+    reserved = {kc, cc, oc, "__rn", "__hc"}
     cols = set(updates.columns) | (set(target.columns) if target is not None else set())
     clash = sorted(reserved & cols)
     if clash:
@@ -123,42 +124,33 @@ def merge_upsert(
             f"merge_upsert: input columns collide with reserved internal "
             f"name(s) {clash}; rename before calling"
         )
-    order_expr = (
-        F.desc(order_col) if order_col else F.monotonically_increasing_id().desc()
-    )
-    tagged = updates.withColumn(kc, F.struct(*keys))
-    if target is None:
-        w = Window.partitionBy(kc).orderBy(order_expr)
-        return (
-            tagged.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", kc)
-        )
-    # SINGLE-EXCHANGE union fold (r15, VERDICT r14 #4; see apply_cdc for
-    # the full rationale): the r14 shape consumed the deduped feed twice
-    # (anti-join probe + survivor union) with divergent column pruning,
-    # so the updates subtree was evaluated and shuffled twice. Target
-    # rows sort below every update row (cc descending first), so per
-    # key the row_number-1 row is the winning update when one exists
-    # and the per-key max(cc) marker says whether target rows survive —
-    # duplicate-key targets keep ALL rows, exactly like the anti-join.
-    t_rows = target.withColumn(kc, F.struct(*keys)).withColumn(cc, F.lit(0))
-    # NULL-pad update-only columns (e.g. order_col) on the target side so
-    # the union carries the full update schema through the window
-    for f in updates.schema.fields:
-        if f.name not in target.columns:
-            t_rows = t_rows.withColumn(f.name, F.lit(None).cast(f.dataType))
-    all_rows = t_rows.unionByName(tagged.withColumn(cc, F.lit(1)))
+    out_cols = updates.columns if target is None else target.columns
+    if order_col is None:
+        # rank the update rows before the union, so the winner cannot
+        # depend on how the union orders its children
+        order_col = oc
+        updates = updates.withColumn(oc, F.monotonically_increasing_id())
+    rows = updates.withColumn(kc, F.struct(*keys)).withColumn(cc, F.lit(1))
+    if target is not None:
+        t_rows = target.withColumn(kc, F.struct(*keys)).withColumn(cc, F.lit(0))
+        # NULL-pad update-only columns (e.g. order_col) on the target side
+        for f in rows.schema.fields:
+            if f.name not in t_rows.columns:
+                t_rows = t_rows.withColumn(f.name, F.lit(None).cast(f.dataType))
+        rows = t_rows.unionByName(rows)
+    # Target rows sort below every update row, so per key the
+    # row_number-1 row is the winning update when one exists, and the
+    # per-key max(cc) says whether target rows survive — duplicate-key
+    # targets keep ALL their rows.
     wk = Window.partitionBy(kc)
-    w = wk.orderBy(F.desc(cc), order_expr)
-    flagged = all_rows.withColumn("__rn", F.row_number().over(w)).withColumn(
+    w = wk.orderBy(F.desc(cc), F.desc(order_col))
+    flagged = rows.withColumn("__rn", F.row_number().over(w)).withColumn(
         "__hc", F.max(cc).over(wk)
     )
     kept = flagged.where(
-        ((F.col(cc) == 1) & (F.col("__rn") == 1))
-        | ((F.col(cc) == 0) & (F.col("__hc") == 0))
+        ((F.col(cc) == 1) & (F.col("__rn") == 1)) | (F.col("__hc") == 0)
     )
-    return kept.select(*target.columns)
+    return kept.select(*out_cols)
 
 
 class ParquetMergeWriter:
@@ -354,63 +346,3 @@ def scd2_apply(
         .unionByName(closed_now.select(*cols))
         .unionByName(opened.select(*cols))
     )
-
-
-class DeltaMergeWriter:
-    """Delta Lake MERGE writer — the production swap-in for
-    ParquetMergeWriter (reference upsert semantics db.py:45-65 as a real
-    ``MERGE INTO``).
-
-    The sandbox has no delta-spark package, so construction degrades to
-    unavailable rather than failing the import; callers check
-    ``available`` (mirrors kafka_io.kafka_available). The merge body is
-    the exact call-site shape a Delta deployment runs — in-batch
-    last-write-wins dedup first (MERGE requires unique source keys),
-    then update-all/insert-all with null-safe key equality.
-    """
-
-    def __init__(self, spark: SparkSession, path: str, keys: list[str]):
-        self.spark = spark
-        self.path = path
-        self.keys = keys
-        try:  # pragma: no cover - package absent in this environment
-            from delta.tables import DeltaTable  # noqa: F401
-
-            self._delta_table_cls = DeltaTable
-        except ImportError:
-            self._delta_table_cls = None
-
-    @property
-    def available(self) -> bool:
-        return self._delta_table_cls is not None
-
-    def merge(self, updates: DataFrame, order_col: str | None = None) -> None:
-        """MERGE INTO target USING deduped-updates ON null-safe keys."""
-        if not self.available:
-            raise RuntimeError(
-                "delta-spark is not installed; use ParquetMergeWriter "
-                "(identical merge semantics over parquet)"
-            )
-        # pragma: no cover start - exercised only on Delta deployments
-        DeltaTable = self._delta_table_cls
-        w = Window.partitionBy(*self.keys).orderBy(
-            F.desc(order_col) if order_col else F.monotonically_increasing_id().desc()
-        )
-        deduped = (
-            updates.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        if not DeltaTable.isDeltaTable(self.spark, self.path):
-            deduped.write.format("delta").mode("overwrite").save(self.path)
-            return
-        target = DeltaTable.forPath(self.spark, self.path)
-        cond = " AND ".join(f"t.{k} <=> s.{k}" for k in self.keys)
-        (
-            target.alias("t")
-            .merge(deduped.alias("s"), cond)
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-        # pragma: no cover end

@@ -5,6 +5,13 @@ the reference's three Airflow DAGs (E1 file_ingestion, E2 data_cleaning,
 E3 data_transformation; SURVEY §3). XCom hand-offs become DataFrame
 lineage; psycopg2 upserts become keyed merges.
 
+Each run stages the drop it was given, like the reference's cleaning DAG
+(which re-reads the drop's CSVs): the raw layer appends every drop, and
+staging cleans only the raw rows stamped with this run's ``batch_id``,
+then merges them into the staging tables (last row per key within the
+drop wins, by ``file_row_number``). ``batch_id`` must therefore be unique
+per run; it is also the run's ``metadata.pipeline_runs.run_id``.
+
 Reference quirks are replicated behind ``replicate_quirks`` (default True,
 matching observed reference output; see SURVEY §7 hard-parts):
 - E3 step 3 overwrites quality_score=100 / is_email_valid=True on the
@@ -146,8 +153,10 @@ def run_batch_pipeline(
     city_master_path: str | None = None,
     replicate_quirks: bool = True,
 ) -> dict[str, int]:
-    """Full E1+E2+E3 run. Returns per-table row counts (the BASELINE.md
-    golden numbers for a single clean run)."""
+    """Full E1+E2+E3 run of one drop (``input_dir``) into
+    ``warehouse_dir``. ``batch_id`` must be unique per run: staging reads
+    the raw rows stamped with it. Returns per-table row counts (the
+    BASELINE.md golden numbers for a single clean run)."""
     from .suite import ensure_session_confs
 
     ensure_session_confs(spark)
@@ -161,37 +170,30 @@ def run_batch_pipeline(
     raw: dict[str, DataFrame] = {}
     for name, path in paths.items():
         df = csv_ingest.read_raw_csv(spark, path, csv_ingest.REQUIRED_COLUMNS[name])
-        staged = csv_ingest.with_lineage(df, batch_id=batch_id)
-        csv_ingest.append_raw(staged, os.path.join(warehouse_dir, "raw", name))
-        raw[name] = spark.read.parquet(os.path.join(warehouse_dir, "raw", name))
-        counts[f"raw.{name}"] = raw[name].count()
+        stamped = csv_ingest.with_lineage(df, batch_id=batch_id)
+        raw_dir = os.path.join(warehouse_dir, "raw", name)
+        csv_ingest.append_raw(stamped, raw_dir)
+        history = spark.read.parquet(raw_dir)
+        counts[f"raw.{name}"] = history.count()
+        # later layers take this drop's rows only; the raw layer keeps all
+        raw[name] = history.where(F.col("batch_id") == batch_id)
 
     # ---- E2: staging ----------------------------------------------------
+    # the staging merge is the only dedup: the drop's last row per key by
+    # file_row_number, which staging keeps as lineage
     master = _load_city_master(spark, city_master_path)
     lineage = ("file_row_number",)
-    stg_students = cleaning.dedup_last_wins(
-        cleaning.clean_students(
-            raw["students_enrollment"], master, ref_date=ref, batch_id=batch_id,
-            passthrough=lineage,
-        ),
-        "student_id",
-        "file_row_number",
+    stg_students = cleaning.clean_students(
+        raw["students_enrollment"], master, ref_date=ref, batch_id=batch_id,
+        passthrough=lineage,
     )
-    stg_progress = cleaning.dedup_last_wins(
-        cleaning.clean_progress(
-            raw["student_progress"], ref_ts=ref_ts, batch_id=batch_id,
-            passthrough=lineage,
-        ),
-        "event_id",
-        "file_row_number",
+    stg_progress = cleaning.clean_progress(
+        raw["student_progress"], ref_ts=ref_ts, batch_id=batch_id,
+        passthrough=lineage,
     )
-    stg_tickets = cleaning.dedup_last_wins(
-        cleaning.clean_tickets(
-            raw["support_tickets"], ref_date=ref, batch_id=batch_id,
-            passthrough=lineage,
-        ),
-        "ticket_id",
-        "file_row_number",
+    stg_tickets = cleaning.clean_tickets(
+        raw["support_tickets"], ref_date=ref, batch_id=batch_id,
+        passthrough=lineage,
     )
 
     writers = {
@@ -204,15 +206,25 @@ def run_batch_pipeline(
         w = warehouse.ParquetMergeWriter(
             spark, os.path.join(warehouse_dir, "staging", name), keys=keys
         )
-        counts[f"staging.{name}"] = w.merge(df.drop("file_row_number"))
+        counts[f"staging.{name}"] = w.merge(df, order_col="file_row_number")
         staged[name] = w.read()
 
     # ---- E3: warehouse --------------------------------------------------
+    def wh_writer(name: str, keys: list[str]) -> warehouse.ParquetMergeWriter:
+        return warehouse.ParquetMergeWriter(
+            spark, os.path.join(warehouse_dir, "warehouse", name), keys=keys
+        )
+
+    # this drop's catalog is merged first; facts join the merged table
+    courses = wh_writer("dim_courses", ["course_id"])
+    counts["warehouse.dim_courses"] = courses.merge(
+        build_dim_courses(raw["course_catalog"], replicate_quirks)
+    )
+    dim_courses = courses.read()
     dim_date = warehouse.build_dim_date(spark)
     dim_students = build_dim_students(
         staged["stg_students"], staged["stg_progress"], ref, replicate_quirks
     )
-    dim_courses = build_dim_courses(raw["course_catalog"], replicate_quirks)
     fact_progress = warehouse.build_fact_progress(
         staged["stg_progress"], dim_students, dim_courses
     )
@@ -232,15 +244,11 @@ def run_batch_pipeline(
     for name, df, keys in [
         ("dim_date", dim_date, ["date_key"]),
         ("dim_students", dim_students, ["student_id"]),
-        ("dim_courses", dim_courses, ["course_id"]),
         ("fact_student_progress", fact_progress, ["event_id"]),
         ("fact_support_tickets", fact_tickets, ["ticket_id"]),
         ("fact_enrollments", fact_enrollments, ["student_sk", "course_sk"]),
     ]:
-        w = warehouse.ParquetMergeWriter(
-            spark, os.path.join(warehouse_dir, "warehouse", name), keys=keys
-        )
-        counts[f"warehouse.{name}"] = w.merge(df)
+        counts[f"warehouse.{name}"] = wh_writer(name, keys).merge(df)
 
     # ---- analytics ------------------------------------------------------
     wh = lambda n: spark.read.parquet(os.path.join(warehouse_dir, "warehouse", n))

@@ -2823,15 +2823,9 @@ def cdc_snapshot_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     row — the exact path whose non-null-safe anti-join duplicated/ignored
     rows before the r12 fix (operators/cdc.py:58).
 
-    Scale: one window over (key, seq) + one null-safe anti-join — the
-    merge_upsert shuffle family; both sides hash-partition on the key.
-    Plan note (EXPLAIN.md): Catalyst splits the anti-join across the
-    snapshot's union legs — the orders-derived leg (provably non-null
-    keys via the %3 filter) runs as a hash anti-join, while the one-row
-    NULL-literal leg becomes a BroadcastNestedLoopJoin whose LEFT side
-    is the single literal row (O(1) work, a test-feed artifact, not a
-    scale path — a real snapshot is one relation and takes the hash
-    join)."""
+    Scale: apply_cdc is merge_upsert's fold — one union of snapshot and
+    feed under one window partitioned on the key struct, so a single
+    hash exchange on the key."""
     from ..operators.cdc import apply_cdc
 
     o = table(spark, sf_dir, "orders").select(

@@ -16,6 +16,7 @@ import os
 import pytest
 
 from edu_data_pipeline_spark import pipeline
+from edu_data_pipeline_spark.operators import warehouse
 
 DATE_VARIANTS = ["1999-05-15", "15/05/1999", "20-12-1998", "May 15, 1999", "18-Jan-24"]
 CITY_VARIANTS = ["Mumbai", "mumbai", "Mumabi", "Banglore", "Bhopal", "Delhi", "Pune"]
@@ -164,3 +165,102 @@ def test_idempotent_rerun(spark, tmp_path):
     assert second["staging.stg_students"] == first["staging.stg_students"] == 30
     assert second["warehouse.fact_student_progress"] == 50
     assert second["warehouse.dim_students"] == 30
+
+
+def write_second_drop(dirpath: str) -> None:
+    """An incremental drop after ``write_fixture_csvs``: STU005 re-sent
+    with a new email as row 1, one new student, event and ticket, and the
+    whole course catalog re-sent with CRS001 twice (the later copy wins)."""
+    os.makedirs(dirpath, exist_ok=True)
+    files = {
+        "students_enrollment.csv": [
+            "student_id,full_name,email,phone,dob,gender,city,state,enrollment_date,program_id,fee_paid,payment_status",
+            "STU005,Name 5 Surname,stu5.new@example.com,9876543205,1999-05-15,Male,"
+            "Mumbai,Maharashtra,2024-01-16,PROG002,50000,Paid",
+            "STU031,Name 31 Surname,user31@example.com,9876543231,1999-05-15,F,"
+            "Pune,Maharashtra,2024-01-16,PROG001,50000,Paid",
+        ],
+        "student_progress.csv": [
+            "event_id,student_id,course_id,event_type,event_timestamp,duration_seconds,score,module_id,completion_percentage",
+            "evt-051,STU031,CRS001,video_watched,2024-02-01T10:30:00Z,600,85.5,MOD001,50.0",
+            "evt-052,STU005,CRS002,quiz_completed,2024-02-02T11:00:00,1200,93.0,MOD002,100.0",
+        ],
+        "course_catalog.csv": [
+            "course_id,course_name,category,difficulty,duration_hours,price,instructor_name,is_active"
+        ] + [
+            f"CRS{i:03d},Course {i},Technology,Beginner,{40 + i},{25000 + i},Instructor {i},TRUE"
+            for i in range(1, 11)
+        ] + ["CRS001,Course 1 Renamed,Technology,Beginner,41,25001,Instructor 1,TRUE"],
+        "support_tickets.csv": [
+            "ticket_id,student_id,subject,description,priority,status,category,created_date,resolved_date",
+            "TKT016,STU031,Cannot access course,description 16,High,Open,Technical,2024-02-05,",
+        ],
+    }
+    for name, lines in files.items():
+        with open(os.path.join(dirpath, name), "w") as f:
+            f.write("\n".join(lines) + "\n")
+
+
+@pytest.fixture(scope="module")
+def two_drops(spark, tmp_path_factory):
+    """(counts, warehouse_dir, fact frame) after the fixture drop (batch
+    b0) and ``write_second_drop`` (batch b1). The fact frame is the second
+    run's fact_student_progress as built, before its merge."""
+    base = tmp_path_factory.mktemp("two_drops")
+    wh_dir = str(base / "warehouse")
+    write_fixture_csvs(str(base / "drop0"))
+    write_second_drop(str(base / "drop1"))
+    facts = []
+    build = warehouse.build_fact_progress
+
+    def capture(*args, **kwargs):
+        facts.append(build(*args, **kwargs))
+        return facts[-1]
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(warehouse, "build_fact_progress", capture)
+        pipeline.run_batch_pipeline(spark, str(base / "drop0"), wh_dir, batch_id="b0")
+        counts = pipeline.run_batch_pipeline(
+            spark, str(base / "drop1"), wh_dir, batch_id="b1"
+        )
+    return counts, wh_dir, facts[-1]
+
+
+def test_second_drop_stages_its_own_rows(spark, two_drops):
+    """A re-sent key takes the new drop's row even though its
+    file_row_number (1) is lower than the old one's (5); rows the drop
+    did not touch keep their batch; is_duplicate counts copies within a
+    drop only (STU001 is duplicated inside drop 0, STU005 is not
+    duplicated inside drop 1)."""
+    counts, wh, _ = two_drops
+    assert counts["staging.stg_students"] == 31
+    assert counts["staging.stg_progress"] == 52
+    assert counts["staging.stg_tickets"] == 16
+    read = lambda layer, name: spark.read.parquet(os.path.join(wh, layer, name))  # noqa: E731
+    stg = {r.student_id: r for r in read("staging", "stg_students").collect()}
+    dim = {r.student_id: r for r in read("warehouse", "dim_students").collect()}
+    assert stg["STU005"].email == dim["STU005"].email == "stu5.new@example.com"
+    assert stg["STU005"].file_row_number == 1
+    assert {sid for sid, r in stg.items() if r.batch_id == "b1"} == {"STU005", "STU031"}
+    assert {r.batch_id for sid, r in stg.items() if sid not in ("STU005", "STU031")} == {"b0"}
+    assert stg["STU005"].is_duplicate is False
+    assert stg["STU001"].is_duplicate is True
+    assert {r.batch_id for r in read("staging", "stg_progress").collect()} == {"b0", "b1"}
+
+
+def test_second_drop_facts_do_not_fan_out(spark, two_drops):
+    """The course catalog is re-sent (and duplicated) in drop 1: the fact
+    frame joins the merged dim_courses, so it has one row per event before
+    the event_id merge, and dim_courses one row per course_id."""
+    from pyspark.sql import functions as F
+
+    counts, wh, fact = two_drops
+    n_events = fact.select("event_id").distinct().count()
+    assert n_events == 52
+    assert fact.count() == n_events
+    assert counts["warehouse.dim_courses"] == 10
+    courses = spark.read.parquet(os.path.join(wh, "warehouse", "dim_courses"))
+    assert courses.select("course_id").distinct().count() == courses.count() == 10
+    assert courses.where(F.col("course_id") == "CRS001").first().course_name == (
+        "Course 1 Renamed"
+    )

@@ -159,3 +159,31 @@ def test_hash_split_is_stable_partition(spark):
     n = len(a)
     train = sum(1 for _, s in a if s == "train")
     assert 0.8 * n <= train <= 0.97 * n
+
+
+def test_keyed_fold_is_one_exchange(spark):
+    """merge_upsert with a target and apply_cdc with a snapshot are one
+    union under one window partitioned on the key struct: the plan holds
+    exactly one Exchange, the hash partitioning of that window."""
+    import pyspark.sql.functions as F
+
+    from edu_data_pipeline_spark.operators.cdc import apply_cdc
+    from edu_data_pipeline_spark.operators.warehouse import merge_upsert
+
+    rows = spark.range(0, 100).select(
+        (F.col("id") % 10).alias("k"), F.col("id").cast("string").alias("v")
+    )
+    changes = rows.select(
+        "k", "v", F.lit("U").alias("_op"), F.col("v").cast("int").alias("seq")
+    )
+    for df in (
+        merge_upsert(rows, rows.withColumn("seq", F.col("v").cast("int")), ["k"], "seq"),
+        merge_upsert(rows, rows, ["k"]),
+        apply_cdc(rows, changes, ["k"], "seq"),
+    ):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        lines = plan.splitlines()
+        exchanges = [i for i, line in enumerate(lines) if "Exchange" in line]
+        assert len(exchanges) == 1, plan
+        assert "hashpartitioning(_mu_k" in lines[exchanges[0]], plan
+        assert any("Window " in line for line in lines[: exchanges[0]]), plan

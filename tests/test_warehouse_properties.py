@@ -146,8 +146,9 @@ def test_scd2_invariants_under_random_batches(spark, seq):
 # ---------------------------------------------------------------------------
 # merge_upsert (r14, VERDICT r13 fuzz-program extension): the S5 keyed
 # upsert underneath ParquetMergeWriter / the streaming foreachBatch MERGE.
-# apply_cdc shares its shuffle shape but NOT its code path — and
-# merge_upsert has two contracts of its own the CDC fuzz never touches:
+# apply_cdc and cleaning.dedup_last_wins are calls to it, so the CDC fuzz
+# above runs this fold too — but merge_upsert has two contracts of its
+# own the CDC fuzz never touches:
 # the target=None bootstrap, and order_col=None, where in-batch
 # last-write-wins falls back to monotonically_increasing_id ROW ORDER
 # (deterministic for a local-list DataFrame: partition ids and offsets
